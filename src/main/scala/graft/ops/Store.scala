@@ -16,6 +16,13 @@ import org.apache.spark.sql.types.DataType
   *    a 20-day re-probe rewrites 20 partitions, never the archive;
   *  - dedup-on-read (`latestByKey`) gives exactly-one-row-per-key views
   *    even if a writer crashed between attempts (idempotent re-runs);
+  *  - LAYOUT INVARIANT: every partition directory written by
+  *    [[writePartitioned]], [[upsert]] or [[purgeKeys]] holds exactly
+  *    ONE data file (see [[writeClustered]]). A read's fixed cost —
+  *    files opened, tasks launched — then grows with the partitions it
+  *    touches, not with partitions × writer tasks. [[compact]] is the
+  *    one writer that may give a large partition several files, sized
+  *    by bytes;
   *  - the summary table is a derived aggregate refreshed after ingest
   *    (the reference's materialized view, availability_db.py:232-242).
   */
@@ -280,9 +287,36 @@ object Store {
       .drop("__rn")
   }
 
-  /** Initial load: write partitioned by `partCol`. */
+  /** Initial load: write partitioned by `partCol`, one file per partition. */
   def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
+    writeClustered(df, path, partCol)
+
+  /** The partitioned write behind [[writePartitioned]], [[upsert]] and
+    * [[purgeKeys]]: rows are hash-routed by `partCol` before
+    * `partitionBy`, so each partition value is written by exactly one
+    * task and its directory holds exactly one data file. Without the
+    * routing every writer task holding rows of a value adds a file to
+    * its directory (4 per date on a 4-core session), and every later
+    * read opens and schedules them all.
+    *
+    * Bound: one task writes a whole partition value. The fact table's
+    * partitions are dates of at most ~1 k rows (≤ 939 symbols in the
+    * reference), so that task stays small by construction; a table
+    * whose single partition values outgrow one task's memory budget
+    * wants [[compact]]'s byte-sized widths instead.
+    *
+    * Dynamic partition overwrite (upsert/purge) replaces whole
+    * directories, so the invariant holds after every write. `routed`
+    * says `df` was already hash-partitioned on `partCol` alone (the
+    * [[mergeTouched]] batch): AQE coalescing merges whole hash
+    * partitions, so each value still sits in one Spark partition, but a
+    * checkpoint of a coalesced plan no longer advertises that, and
+    * routing again would shuffle the batch a second time.
+    */
+  private def writeClustered(df: DataFrame, path: String, partCol: String,
+                             routed: Boolean = false): Unit =
+    (if (routed) df else df.repartition(col(partCol)))
+      .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
 
   /** UPSERT a batch: merge with the existing rows of ONLY the touched
     * partitions, keep the newest row per key, and dynamically overwrite
@@ -297,12 +331,7 @@ object Store {
     val savedMode = spark.conf.getOption(overwriteModeKey)
     spark.conf.set(overwriteModeKey, "dynamic")
     try {
-      val existing = spark.read.parquet(path)
-      // Partition pruning: only read partitions present in the update batch.
-      val touched = updates.select(col(partCol)).distinct()
-      val affected = existing.join(broadcast(touched), Seq(partCol), "left_semi")
-      val merged = latestByKey(
-        affected.unionByName(updates.select(existing.columns.toIndexedSeq.map(col): _*)),
+      val merged = mergeTouched(spark.read.parquet(path), updates, partCol,
         keys, tsCol, tieBreak)
       // Lineage cut BEFORE the overwrite: without it the write job both
       // reads and deletes the same partitions, and a mid-commit failure
@@ -311,13 +340,14 @@ object Store {
       // relative to the archive. (Same pattern as refreshRankingsArchive.)
       val staged = merged.localCheckpoint(eager = true)
       assertLeaseOwner(spark, path) // fence: zombie writers stop BEFORE the overwrite
-      staged.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
+      writeClustered(staged, path, partCol, routed = true)
       // Data-skipping manifest rides the upsert: stats recomputed for
       // the touched partitions only (batch-proportional, like the
       // upsert itself).
       if (statsCols.nonEmpty)
         refreshManifestIncremental(spark, path, partCol,
-          touched.collect().map(r => if (r.isNullAt(0)) null else r.get(0)).toIndexedSeq,
+          updates.select(col(partCol)).distinct().collect()
+            .map(r => if (r.isNullAt(0)) null else r.get(0)).toIndexedSeq,
           statsCols)
     } finally {
       savedMode match {
@@ -327,11 +357,31 @@ object Store {
     }
   } // withLease
 
+  /** The [[upsert]] merge: the stored rows of the partitions the batch
+    * touches (semi-join on its broadcast partition values), plus the
+    * batch, newest row per key. The rows are routed by `partCol` BEFORE
+    * the window: hash partitioning on `partCol` alone already clusters
+    * every key that contains it, so the window reuses that exchange
+    * (the merge runs exactly one shuffle) and the output arrives laid
+    * out for [[writeClustered]].
+    */
+  private[graft] def mergeTouched(existing: DataFrame, updates: DataFrame,
+                                  partCol: String, keys: Seq[String],
+                                  tsCol: String, tieBreak: String): DataFrame = {
+    val touched = updates.select(col(partCol)).distinct()
+    val affected = existing.join(broadcast(touched), Seq(partCol), "left_semi")
+    latestByKey(
+      affected.unionByName(updates.select(existing.columns.toIndexedSeq.map(col): _*))
+        .repartition(col(partCol)),
+      keys, tsCol, tieBreak)
+  }
+
   /** PURGE keys (right-to-be-forgotten / takedown propagation): delete
     * every row whose key tuple appears in `purge`, rewriting ONLY the
     * partitions that actually contain those keys — the deletion twin of
     * [[upsert]], with the same dynamic-partition-overwrite + eager
-    * lineage cut crash-safety. The purge list broadcasts twice: once to
+    * lineage cut crash-safety, and the same one-file-per-partition
+    * layout ([[writeClustered]]). The purge list broadcasts twice: once to
     * find affected partitions (semi-join on the partition values the
     * purge rows land in — computed FROM the store, since the caller
     * only knows keys, not partitions), once to anti-join the survivors.
@@ -385,7 +435,7 @@ object Store {
         val keptParts = kept.select(col(partCol)).distinct()
           .collect().map(pv).toSet
         assertLeaseOwner(spark, path) // fence: zombie writers stop BEFORE the overwrite
-        kept.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
+        writeClustered(kept, path, partCol)
         // Dynamic overwrite only rewrites partitions PRESENT in the
         // written data: a partition whose every row was purged has no
         // survivors to write, so its old files would silently remain —
@@ -708,14 +758,17 @@ object Store {
   }
 
   /** Small-file compaction: rewrite a partitioned table so each
-    * partition directory holds ~ceil(bytes/targetBytes) files instead
-    * of one file per historical ingest batch. Returns
+    * partition directory holds ~ceil(bytes/targetBytes) files. Returns
     * (filesBefore, filesAfter).
     *
-    * Why it matters at 100 TB: a daily-upsert table accretes one file
-    * per batch per partition; scan cost (driver listing, task launch,
-    * row-group open) grows with file COUNT, not bytes. Compaction
-    * restores the bytes-proportional cost.
+    * Why it matters at 100 TB: scan cost (driver listing, task launch,
+    * row-group open) grows with file COUNT, not bytes. Tables written
+    * through [[writePartitioned]], [[upsert]] and [[purgeKeys]] already
+    * hold one file per partition ([[writeClustered]]); compaction is for
+    * the rest — tables appended by plain `partitionBy` writers, which
+    * accrete one file per writer task per batch per partition — and for
+    * partitions that have grown past `targetBytes`, which it splits into
+    * byte-sized files. It restores the bytes-proportional cost.
     *
     * Shape: per-partition output file counts come from the actual
     * on-disk byte sizes (one filesystem listing, no data read); rows

@@ -101,6 +101,136 @@ class StoreSpec extends SparkSpec {
     spark.read.parquet(path).count() shouldBe 5
   }
 
+  /** Parquet data files in each `partCol=` directory of a table. */
+  private def filesPerPartition(path: String, partCol: String): Map[String, Int] =
+    new java.io.File(path).listFiles().toSeq
+      .filter(d => d.isDirectory && d.getName.startsWith(s"$partCol="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      .toMap
+
+  test("writePartitioned, upsert and purgeKeys leave exactly one data file " +
+    "per partition directory") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-layout").toString + "/t"
+    val syms = (1 to 12).map(i => s"S$i")
+    def day(i: Int) = Date.valueOf(f"2024-02-$i%02d")
+    // Round-robin input partitions: every date's rows sit in every one of
+    // them, so an unrouted partitionBy write gives each date one file per
+    // input partition.
+    def rows(days: Seq[Int], size: Long, probeTs: String, parts: Int) =
+      (for (d <- days; s <- syms)
+        yield (day(d), s, true, size, Timestamp.valueOf(probeTs)))
+        .toDF("date", "symbol", "available", "file_size_bytes", "probe_timestamp")
+        .repartition(parts)
+    def onePerDate(days: Seq[Int]) = days.map(d => s"date=${day(d)}" -> 1).toMap
+
+    val base = rows(1 to 6, 100L, "2024-02-10 02:00:00", 3)
+    base.rdd.getNumPartitions shouldBe 3
+    Store.writePartitioned(base, path, "date")
+    filesPerPartition(path, "date") shouldBe onePerDate(1 to 6)
+
+    // re-probe dates 4-6 and add date 7
+    val batch = rows(4 to 7, 200L, "2024-02-11 02:00:00", 4)
+    batch.rdd.getNumPartitions shouldBe 4
+    Store.upsert(spark, path, batch, "date",
+      Seq("date", "symbol"), "probe_timestamp", "file_size_bytes")
+    filesPerPartition(path, "date") shouldBe onePerDate(1 to 7)
+    spark.read.parquet(path).count() shouldBe 7L * syms.size
+
+    // purge two symbols on dates 1-5: five partitions rewritten, none emptied
+    val purge = (for (d <- 1 to 5; s <- Seq("S1", "S2")) yield (day(d), s))
+      .toDF("date", "symbol").repartition(2)
+    Store.purgeKeys(spark, path, purge, "date", Seq("date", "symbol")) shouldBe 10L
+    filesPerPartition(path, "date") shouldBe onePerDate(1 to 7)
+    spark.read.parquet(path).count() shouldBe 7L * syms.size - 10L
+  }
+
+  test("the upsert merge runs exactly one shuffle, hash-partitioned on the " +
+    "partition column alone") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val path = Files.createTempDirectory("graft-merge-plan").toString + "/t"
+    Store.writePartitioned(grid("2024-01-18 02:00:00", 8000000L), path, "date")
+    val reprobe = grid("2024-01-19 02:00:00", 9000000L)
+      .filter(col("date") === Date.valueOf("2024-01-16"))
+    // Shuffles on the merge path. The batch's distinct partition values
+    // are aggregated under the broadcast of the semi-join; that exchange
+    // feeds the broadcast, not the merge.
+    def mergeShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+      case _: BroadcastExchangeExec => Nil
+      case s: ShuffleExchangeExec => s +: s.children.flatMap(mergeShuffles)
+      case o => o.children.flatMap(mergeShuffles)
+    }
+    // AQE's root hides the tree from traversal: plan with it off.
+    val aqe = "spark.sql.adaptive.enabled"
+    val saved = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
+    try {
+      val merged = Store.mergeTouched(spark.read.parquet(path), reprobe, "date",
+        Seq("date", "symbol"), "probe_timestamp", "file_size_bytes")
+      val shuffles = mergeShuffles(merged.queryExecution.executedPlan)
+      shuffles should have size 1
+      shuffles.head.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)) shouldBe Seq("date")
+        case other => fail(s"expected hash partitioning on date, got $other")
+      }
+      merged.count() shouldBe 3
+    } finally saved match {
+      case Some(v) => spark.conf.set(aqe, v)
+      case None => spark.conf.unset(aqe)
+    }
+  }
+
+  test("reading a 40-partition table under Sessions.local's listing setting " +
+    "runs no distributed listing job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-listing").toString + "/t"
+    val days = (0 until 40).map(i => Date.valueOf(java.time.LocalDate.of(2024, 3, 1).plusDays(i)))
+    Store.writePartitioned(days.map(d => (d, "BTCUSDT", 1L)).toDF("date", "symbol", "v"),
+      path, "date")
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit =
+        descriptions.add(Option(s.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    // Listing jobs started by `body`. The bus delivers events in order, so
+    // once a marker job's start has arrived every earlier job's has too.
+    def listingJobs(body: => Long): Int = {
+      descriptions.clear()
+      body shouldBe 40L
+      val marker = s"listing-spec-drain-${java.util.UUID.randomUUID()}"
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!descriptions.contains(marker) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      descriptions.contains(marker) shouldBe true
+      descriptions.toArray(Array.empty[String]).count(_.startsWith("Listing leaf files"))
+    }
+    val (key, value) = Sessions.DriverListing
+    val saved = spark.conf.getOption(key)
+    sc.addSparkListener(listener)
+    try {
+      // Control: Spark's default threshold lists 40 directories with a job,
+      // so the listener does see listing jobs when they run.
+      spark.conf.unset(key)
+      listingJobs(spark.read.parquet(path).count()) should be >= 1
+      spark.conf.set(key, value)
+      listingJobs(spark.read.parquet(path).count()) shouldBe 0
+    } finally {
+      sc.removeSparkListener(listener)
+      saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("expireBefore drops whole partitions by TTL and filters their manifest rows") {
     val path = Files.createTempDirectory("graft-expire").toString + "/t"
     // grid() writes dates 2024-01-15..17, 3 symbols each.
